@@ -518,34 +518,19 @@ def stream_latency_probe(spark, sf_dir: str) -> dict[str, float]:
     the number a streaming deployment actually watches — headline
     timings above measure throughput of the drained plan instead."""
     import statistics
-    import tempfile
-    import uuid
 
-    from eco_pulse_lakehouse_spark.catalog import load_table
+    from eco_pulse_lakehouse_spark.corpus.streaming_corpus import (
+        EVENTS_SCHEMA,
+        _stage_events,
+    )
     from eco_pulse_lakehouse_spark.streaming import pipeline as sp
 
-    base = os.path.join(tempfile.gettempdir(), f"eco_pulse_lat_{uuid.uuid4().hex}")
-    stage = os.path.join(base, "in")
-    load_table(spark, sf_dir, "events").repartition(16).write.parquet(stage)
-    schema = (
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type STRING, value DOUBLE, props STRING"
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(stage)
+    stream = sp.read_file_stream(
+        spark, _stage_events(spark, sf_dir, parts=16), EVENTS_SCHEMA,
+        max_files_per_trigger=1,
     )
     silver = sp.to_silver(stream, "ts", ["event_id"], with_processed_at=False)
-    q = (
-        silver.writeStream.format("parquet")
-        .option("path", os.path.join(base, "out"))
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = sp.run_to_parquet(silver, sp.scratch("out"))
     durs = [
         p["durationMs"]["triggerExecution"]
         for p in q.recentProgress
@@ -568,36 +553,26 @@ def stream_state_probe(spark, sf_dir: str) -> dict[str, float]:
     with a 30-min watermark and report the state rows/bytes the last
     micro-batch holds. Growth across rounds at fixed sf means an
     unbounded-state regression (watermark not pruning)."""
-    import tempfile
-    import uuid
-
-    from eco_pulse_lakehouse_spark.catalog import load_table
-    from eco_pulse_lakehouse_spark.streaming import pipeline as sp
-
-    base = os.path.join(tempfile.gettempdir(), f"eco_pulse_state_{uuid.uuid4().hex}")
-    stage = os.path.join(base, "in")
-    load_table(spark, sf_dir, "events").repartition(4).write.parquet(stage)
-    schema = (
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type STRING, value DOUBLE, props STRING"
-    )
     from pyspark.sql import functions as F
 
-    stream = spark.readStream.format("parquet").schema(schema).load(stage)
+    from eco_pulse_lakehouse_spark.corpus.streaming_corpus import (
+        EVENTS_SCHEMA,
+        _stage_events,
+    )
+    from eco_pulse_lakehouse_spark.streaming import pipeline as sp
+
+    stream = sp.read_file_stream(
+        spark, _stage_events(spark, sf_dir), EVENTS_SCHEMA
+    )
     silver = sp.to_silver(stream, "ts", ["event_id"], with_processed_at=False)
     # silver already carries the watermark — aggregate directly
     # (re-declaring one above a stateful op is disallowed)
     agg = silver.groupBy(F.window("ts", "1 hour"), "event_type").count()
-    q = (
+    q = sp.drain(
         agg.writeStream.format("noop")
-        .option(
-            "checkpointLocation", os.path.join(base, "ck")
-        )
+        .option("checkpointLocation", sp.scratch("ckpt"))
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     ops = (q.lastProgress or {}).get("stateOperators") or []
     if not ops:
         return {}

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -1409,16 +1408,13 @@ def s15_compaction(spark, sf_dir):
     is unchanged. At 100 TB the scan's task count and listing
     pressure follow the FILE count, so this is the maintenance op
     that keeps read amplification flat."""
-    import os
-    import tempfile
-    import uuid
-
     from eco_pulse_lakehouse_spark.sources.batch_io import compact_files
+    from eco_pulse_lakehouse_spark.streaming.pipeline import scratch
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"s15_compact_{uuid.uuid4().hex[:8]}"
+    path = scratch("compact")
+    T(spark, sf_dir, "events").repartition(64).write.mode("overwrite").parquet(
+        path
     )
-    T(spark, sf_dir, "events").repartition(64).write.parquet(path)
     before, after = compact_files(spark, path, target_files=4)
     assert before >= 64 and after == 4
     return (

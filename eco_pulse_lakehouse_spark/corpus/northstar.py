@@ -956,20 +956,17 @@ def x3_ivf_persisted(spark, sf_dir):
     ivf_topk replay) — the persisted lifecycle changes only where
     the lists live, not the results."""
     import os
-    import tempfile
-    import uuid
 
     from eco_pulse_lakehouse_spark.operators.similarity import (
         build_ivf_index,
         query_ivf_index,
     )
+    from eco_pulse_lakehouse_spark.streaming.pipeline import scratch
 
     e = T(spark, sf_dir, "embeddings")
     path = _IVF_INDEX_CACHE.get(sf_dir)
     if not (path and os.path.exists(f"{path}/lists")):
-        path = os.path.join(
-            tempfile.gettempdir(), f"eco_pulse_ivf_{uuid.uuid4().hex}"
-        )
+        path = scratch("ivf")
         build_ivf_index(e, path, n_centroids=16)
         _IVF_INDEX_CACHE[sf_dir] = path
     queries = e.filter(F.col("vec_id") < 10).select(

@@ -12,6 +12,12 @@ Tests drive these with file sources + ``availableNow`` triggers (no
 Kafka needed); the Kafka wiring lives in sources/kafka_io.py and is
 the same DataFrame in, DataFrame out.
 
+Drain mechanics live here once: :func:`drain` is the single
+availableNow start + await, :func:`land_partials` owns the
+epoch-keyed ``batch=<id>`` partial layout every incremental twin
+lands, and :func:`scratch` hands out temp dirs under one per-process
+root that is removed at interpreter exit.
+
 Scale notes: stateful dedup keeps one state row per key inside the
 watermark horizon — key the dedup on a compact natural key and keep
 the watermark tight (10 min here). Windowed aggs emit finalized
@@ -20,19 +26,23 @@ windows on watermark advance (append mode) — no unbounded state.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
+import shutil
 import tempfile
-import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
 
 
 def read_file_stream(
     spark: SparkSession,
     path: str,
-    schema: str,
+    schema: str | StructType,
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -95,6 +105,84 @@ def windowed_counts(
     return src.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
 
 
+_SCRATCH_ROOT: tuple[int, str] | None = None  # (owning pid, root dir)
+
+
+def _remove_scratch_root() -> None:
+    if _SCRATCH_ROOT is not None and _SCRATCH_ROOT[0] == os.getpid():
+        shutil.rmtree(_SCRATCH_ROOT[1], ignore_errors=True)
+
+
+def scratch(tag: str = "scratch") -> str:
+    """A fresh, empty directory for sinks, checkpoints and staged
+    inputs. All of them live under ONE root per process
+    (``<tmp>/eco_pulse_<random>``), created on first use and removed
+    by an ``atexit`` hook, so a long test run or bench session leaves
+    nothing behind. A forked child never removes its parent's root."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None or _SCRATCH_ROOT[0] != os.getpid():
+        _SCRATCH_ROOT = (os.getpid(), tempfile.mkdtemp(prefix="eco_pulse_"))
+        atexit.register(_remove_scratch_root)
+    return tempfile.mkdtemp(prefix=f"{tag}_", dir=_SCRATCH_ROOT[1])
+
+
+def drain(
+    writer: DataStreamWriter | DataFrame,
+    each_batch: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Run a streaming write to completion: one ``availableNow``
+    start, then await. ``writer`` is a configured DataStreamWriter,
+    or a streaming DataFrame whose micro-batches go to
+    ``each_batch(batch_df, batch_id)`` via foreachBatch, checkpointed
+    under ``checkpoint`` (a fresh scratch dir by default). Returns
+    the finished query, so callers can read ``recentProgress`` /
+    ``lastProgress``."""
+    if each_batch is not None:
+        writer = writer.writeStream.foreachBatch(each_batch).option(
+            "checkpointLocation", checkpoint or scratch("ckpt")
+        )
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
+def land_partials(
+    stream: DataFrame,
+    partial: Callable[[DataFrame], DataFrame | dict[str, DataFrame] | None],
+    root: str | None = None,
+) -> DataFrame | dict[str, DataFrame]:
+    """Drain ``stream`` landing one partial per micro-batch — the
+    per-batch amortised index maintenance every incremental twin
+    shares. ``partial(batch_df)`` returns a DataFrame, written to
+    ``root/batch=<id>``, or a dict name → DataFrame, written in dict
+    order to ``root/<name>/batch=<id>`` (None lands nothing). Writes
+    overwrite, so a replayed epoch rewrites its own directory instead
+    of duplicating it; the checkpoint lives at ``root/_checkpoint``,
+    so re-draining the same source into the same root is a no-op.
+    Returns the ``batch=*`` reader, or a dict of readers by name."""
+    root = root or scratch("partials")
+
+    def land(batch_df: DataFrame, batch_id: int) -> None:
+        out = partial(batch_df)
+        if isinstance(out, DataFrame):
+            out = {"": out}
+        for name, df in (out or {}).items():
+            df.write.mode("overwrite").parquet(
+                os.path.join(root, name, f"batch={batch_id}")
+            )
+
+    drain(stream, land, os.path.join(root, "_checkpoint"))
+    read = stream.sparkSession.read.parquet
+    names = sorted(
+        d for d in os.listdir(root)
+        if d != "_checkpoint" and not d.startswith("batch=")
+    )
+    if not names:
+        return read(os.path.join(root, "batch=*"))
+    return {n: read(os.path.join(root, n, "batch=*")) for n in names}
+
+
 @contextlib.contextmanager
 def _scoped_state_partitions(spark, n: int | None):
     """Pin ``spark.sql.shuffle.partitions`` while a streaming query
@@ -132,14 +220,11 @@ def run_to_memory(
     return the result table (hermetic test harness; the guide's
     processAllAvailable pattern)."""
     with _scoped_state_partitions(df.sparkSession, state_partitions):
-        q = (
+        drain(
             df.writeStream.format("memory")
             .queryName(query_name)
             .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
     return df.sparkSession.table(query_name)
 
 
@@ -149,26 +234,22 @@ def run_to_parquet(
     checkpoint: str | None = None,
     output_mode: str = "append",
     state_partitions: int | None = None,
-) -> None:
+) -> StreamingQuery:
     """S3 analogue — checkpointed append file sink (Delta in the
     reference, parquet in this image; sources/delta_io.py upgrades
     when delta-spark is importable). Re-running with the same
     checkpoint is a no-op for already-committed source files —
     exactly-once to the sink (T2). ``state_partitions`` sizes the
-    stateful-operator partitioning (see _scoped_state_partitions)."""
-    checkpoint = checkpoint or os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_ckpt_{uuid.uuid4().hex}"
-    )
+    stateful-operator partitioning (see _scoped_state_partitions).
+    Without ``checkpoint`` the query checkpoints to a fresh scratch
+    dir. Returns the finished query."""
     with _scoped_state_partitions(df.sparkSession, state_partitions):
-        q = (
+        return drain(
             df.writeStream.format("parquet")
             .option("path", path)
-            .option("checkpointLocation", checkpoint)
+            .option("checkpointLocation", checkpoint or scratch("ckpt"))
             .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
 
 def chained_window_rollup(

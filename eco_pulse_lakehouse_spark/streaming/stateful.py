@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from eco_pulse_lakehouse_spark.streaming.pipeline import drain
+
 
 def running_totals_stream(
     events: DataFrame, ttl_ms: int | None = None
@@ -173,7 +175,8 @@ def foreach_batch_upsert(
 ):
     """Streaming MERGE sink: each micro-batch upserts into the parquet
     target (Delta MERGE is the transactional upgrade when delta-spark
-    is present).
+    is present). Drains the stream to completion (pipeline.drain) and
+    returns the finished query.
 
     Semantics: at-least-once with idempotent-by-key replay — the
     checkpoint dedups source offsets, and re-running a batch converges
@@ -239,12 +242,7 @@ def foreach_batch_upsert(
         os.rename(staging, target_path)
         shutil.rmtree(backup, ignore_errors=True)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, sink, checkpoint)
 
 
 def foreach_batch_fanout(
@@ -257,7 +255,8 @@ def foreach_batch_fanout(
     """One stream, TWO sinks per micro-batch (foreachBatch fan-out):
     append the detail rows AND a per-batch metrics row (count +
     quantized value sum) — the bronze+observability shape every
-    ingest pipeline ends up needing.
+    ingest pipeline ends up needing. Drains to completion and returns
+    the finished query.
 
     foreachBatch gives no transactional guarantee across two writes,
     so exactly-once is recovered by construction: each sink writes
@@ -292,12 +291,7 @@ def foreach_batch_fanout(
         )
         b.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, sink, checkpoint)
 
 
 def running_totals_tws(events: DataFrame) -> DataFrame:

@@ -865,3 +865,31 @@ class TestIncrementalComponentsEqualsFull:
             r.id: r.comp for r in connected_components(full).collect()
         }
         assert inc == truth
+
+
+def test_hashed_feature_count_inverts_to_token_count(spark):
+    """budget_select derives n_tokens as (n_feats + 1) div 2 from the
+    DSIR feature stream (operators/selection.py) — exact only while
+    _hashed_features emits unigrams + word bigrams, i.e. 2n − 1
+    features for n ≥ 1 tokens. Pin the invariant on arbitrary texts:
+    empty strings and repeated, leading and trailing spaces
+    included."""
+    from eco_pulse_lakehouse_spark.functions.text import token_count
+    from eco_pulse_lakehouse_spark.operators.selection import (
+        _hashed_features,
+    )
+
+    @settings(max_examples=10, deadline=None)
+    @given(st.lists(st.text(alphabet="ab \t", max_size=12), min_size=1,
+                    max_size=20))
+    def check(texts):
+        df = spark.createDataFrame([(t,) for t in texts], "text STRING")
+        rows = df.select(
+            F.size(_hashed_features(F.col("text"), 128)).alias("n_feats"),
+            token_count(F.col("text")).alias("n_tok"),
+        ).select(
+            F.expr("(n_feats + 1) div 2").alias("n_inv"), "n_tok"
+        ).collect()
+        assert all(r.n_inv == r.n_tok for r in rows)
+
+    check()

@@ -647,3 +647,82 @@ def test_stream_winnowing_incremental_equals_batch(spark):
         ).collect()
     }
     assert streamed == batch and len(batch) > 0
+
+
+def test_scratch_dirs_share_one_root_removed_at_exit():
+    """Every scratch dir of a process sits under ONE root, and the
+    root is gone once the process exits — long-lived sessions leave
+    no temp dirs behind."""
+    import json
+    import subprocess
+    import sys
+
+    code = (
+        "import json\n"
+        "from eco_pulse_lakehouse_spark.streaming.pipeline import scratch\n"
+        "print(json.dumps([scratch(), scratch('sink')]))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    a, b = json.loads(out.strip().splitlines()[-1])
+    root = os.path.dirname(a)
+    assert a != b and os.path.dirname(b) == root
+    assert os.path.basename(root).startswith("eco_pulse_")
+    assert not os.path.exists(root)
+
+
+def test_land_partials_replay_adds_nothing(spark, tmp_path):
+    """A second drain of the same source into the same root resumes
+    from the root's checkpoint: no new batch=<id> partial lands and
+    the readers return the same rows — for single and named
+    (multi-output) partials alike."""
+    stage = _stage(spark, tmp_path)
+    calls = []  # foreachBatch calls partial() in this process: count them
+
+    def single(b):
+        calls.append(1)
+        return b.groupBy("event_type").count()
+
+    def named(b):
+        return {"ids": b.select("event_id"), "types": single(b)}
+
+    for partial in (single, named):
+        root = str(tmp_path / partial.__name__)
+
+        def drain():
+            calls.clear()
+            stream = sp.read_file_stream(
+                spark, stage, SCHEMA, max_files_per_trigger=1
+            )
+            out = sp.land_partials(stream, partial, root)
+            readers = out.values() if isinstance(out, dict) else [out]
+            return [sorted(r.collect()) for r in readers]
+
+        def landed():
+            return sorted(
+                os.path.relpath(os.path.join(d, n), root)
+                for d, dirs, _ in os.walk(root)
+                for n in dirs
+                if n.startswith("batch=")
+            )
+
+        first, batches = drain(), landed()
+        assert len(calls) == 2
+        assert len(batches) == (2 if partial is single else 4)
+        assert drain() == first
+        assert not calls  # resumed from root/_checkpoint: no batch ran
+        assert landed() == batches
+
+
+def test_streaming_corpus_drains_only_through_pipeline():
+    """The streaming twins start queries and allocate temp dirs only
+    through streaming/pipeline.py (drain / land_partials / scratch)."""
+    from eco_pulse_lakehouse_spark.corpus import streaming_corpus
+
+    with open(streaming_corpus.__file__) as f:
+        src = f.read()
+    for banned in ("writeStream", "tempfile", ".start()"):
+        assert banned not in src, banned
